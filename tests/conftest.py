@@ -14,6 +14,19 @@ N_CONV = 60  # t1-scale corpus: ~1.2k turns, builds in ~1 min once per session
 INDEX_DIR = "/tmp/tlgs_spark_test_index"
 
 
+def cached_index_current(index_dir: str) -> bool:
+    """A test index cached on disk across runs is reused only while its
+    meta passes the build's gate (postings format, docs layout,
+    analyzer) — a format bump rebuilds every cached index."""
+    from tlgs_spark.indexer.build import index_meta_current
+    from tlgs_spark.indexer.storage import IndexStorage
+
+    try:
+        return index_meta_current(IndexStorage(index_dir).read_meta())
+    except FileNotFoundError:
+        return False
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="tlgs_spark_tests", cores=8)
@@ -30,23 +43,7 @@ def corpus_pdf():
 def index_dir(spark):
     """A built index over the deterministic corpus (session-cached on
     disk: rebuilt only when absent, so repeated pytest runs are fast)."""
-    meta_ok = os.path.exists(os.path.join(INDEX_DIR, "index_meta.json"))
-    if meta_ok:
-        import json
-
-        from tlgs_spark.indexer.build import DOCS_LAYOUT_SHARDED, POSTINGS_FORMAT
-        from tlgs_spark.tokenizer import ANALYZER_VERSION
-
-        with open(os.path.join(INDEX_DIR, "index_meta.json")) as f:
-            cached = json.load(f)
-        # stale cache from an older layout/format/analyzer generation →
-        # rebuild
-        meta_ok = (
-            cached.get("docs_layout") == DOCS_LAYOUT_SHARDED
-            and cached.get("postings_format") == POSTINGS_FORMAT
-            and cached.get("tokenizer") == ANALYZER_VERSION
-        )
-    if not meta_ok:
+    if not cached_index_current(INDEX_DIR):
         shutil.rmtree(INDEX_DIR, ignore_errors=True)
         sdf = generate_spark(spark, N_CONV, partitions=4)
         build_index(spark, sdf, INDEX_DIR, n_shards=7, lineage="tests:N_CONV=60")

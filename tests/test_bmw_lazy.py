@@ -1,4 +1,4 @@
-"""Block-skipped (lazy) postings decode — postings format 3.
+"""Block-skipped (lazy) postings decode (block-max WAND).
 
 Contracts pinned here (r3 VERDICT #2, true block-max WAND):
 - per-block byte offsets + (tf, dl) Pareto fronts are stored at build
@@ -15,6 +15,7 @@ Contracts pinned here (r3 VERDICT #2, true block-max WAND):
 
 import numpy as np
 import pytest
+from conftest import cached_index_current
 
 from tlgs_spark.corpus import generate_spark
 from tlgs_spark.indexer.build import build_index
@@ -38,28 +39,12 @@ N_CONV_BMW = 400  # big enough that hot terms span many 128-blocks
 
 @pytest.fixture(scope="module")
 def bmw_index(spark):
-    import os
     import shutil
 
-    if not os.path.exists(os.path.join(BMW_DIR, "index_meta.json")):
+    if not cached_index_current(BMW_DIR):
         shutil.rmtree(BMW_DIR, ignore_errors=True)
         sdf = generate_spark(spark, N_CONV_BMW, partitions=8)
         build_index(spark, sdf, BMW_DIR, n_shards=11, lineage="tests:bmw")
-    else:
-        import json
-
-        from tlgs_spark.indexer.build import POSTINGS_FORMAT
-        from tlgs_spark.tokenizer import ANALYZER_VERSION
-
-        with open(os.path.join(BMW_DIR, "index_meta.json")) as f:
-            cached = json.load(f)
-        if (
-            cached.get("postings_format") != POSTINGS_FORMAT
-            or cached.get("tokenizer") != ANALYZER_VERSION
-        ):
-            shutil.rmtree(BMW_DIR, ignore_errors=True)
-            sdf = generate_spark(spark, N_CONV_BMW, partitions=8)
-            build_index(spark, sdf, BMW_DIR, n_shards=11, lineage="tests:bmw")
     return BMW_DIR
 
 
@@ -189,7 +174,7 @@ def test_front_bound_is_exact_block_max(bmw_si):
 
 
 def test_engine_search_uses_lazy_and_is_oracle_identical(bmw_si, spark, bmw_index):
-    """End-to-end through SearchIndex.search on the format-3 index vs
+    """End-to-end through SearchIndex.search on the built index vs
     the pure-Python oracle (ids + exact float scores)."""
     from tlgs_spark import oracle as O
     from tlgs_spark.corpus import generate_pandas

@@ -121,6 +121,60 @@ def test_resume_produces_identical_index(spark, tmp_path):
     pd.testing.assert_frame_equal(a, b)
 
 
+def test_resume_over_stale_meta_builds_fresh(spark, tmp_path):
+    """A resume over an index whose meta fails the format/layout/
+    analyzer gate must not trust its docs, ledger or shard files: it
+    builds fresh from the corpus it is given, and the result serves
+    oracle-identical hits."""
+    import json
+
+    from tlgs_spark.indexer.build import index_meta_current
+    from tlgs_spark.query.engine import SearchIndex
+
+    idx = str(tmp_path / "idx_stale")
+    build_index(spark, generate_spark(spark, 6, partitions=2), idx, n_shards=3)
+    mf = os.path.join(idx, "index_meta.json")
+    meta = json.load(open(mf))
+    meta["postings_format"] = 3
+    json.dump(meta, open(mf, "w"))
+
+    pdf = generate_pandas(10)
+    build_index(spark, spark.createDataFrame(pdf), idx, n_shards=3, resume=True)
+    assert index_meta_current(IndexStorage(idx).read_meta())
+    pdf = pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    oidx = O.build_index(list(zip(range(len(pdf)), pdf.text)))
+    si = SearchIndex(spark, idx)
+    for q, mode in [("tok0000 tok0001", "or"), ("tok0002", "and"), ("marker000", "and")]:
+        got = si.search(q, k=50, mode=mode)
+        exp = O.search(oidx, q, k=50, mode=mode)
+        assert list(zip((int(d) for d in got["doc_id"]), got["score"])) == exp, q
+
+
+@pytest.mark.parametrize(
+    "field,stale",
+    [
+        ("postings_format", 3),
+        ("tokenizer", "tlgs_spark.tokenizer v2 (s-stem)"),
+        ("docs_layout", None),
+    ],
+)
+def test_search_index_refuses_stale_meta(spark, index_dir, tmp_path, field, stale):
+    """Opening an index written by an older build fails loudly and says
+    to rebuild, instead of serving it through removed readers."""
+    import json
+
+    from tlgs_spark.query.engine import SearchIndex
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(index_dir, idx)
+    mf = os.path.join(idx, "index_meta.json")
+    meta = json.load(open(mf))
+    meta[field] = stale
+    json.dump(meta, open(mf, "w"))
+    with pytest.raises(ValueError, match="rebuild"):
+        SearchIndex(spark, idx)
+
+
 def test_finalize_self_heals_on_resume(spark, tmp_path):
     """A build killed between the postings write and the term_stats /
     collection_stats finalize must self-heal on resume: finalize is

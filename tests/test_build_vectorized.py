@@ -1,70 +1,106 @@
-"""The vectorized whole-shard encoder must equal a naive per-term
-reference implementation byte-for-byte."""
+"""The vectorized whole-shard builder (_build_shard_table, the kernel
+every build runs) must equal a naive per-term reference byte-for-byte."""
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
-from tlgs_spark import bm25
-from tlgs_spark.indexer.build import _build_shard
-from tlgs_spark.indexer.codec import decode_postings, encode_postings
+from tlgs_spark.indexer.build import _build_shard_table
+from tlgs_spark.indexer.codec import decode_postings, decode_varints, encode_postings
+from tlgs_spark.tokenizer import term_freqs
+
+# the postings format's columns, in write order (POSTINGS_SCHEMA)
+POSTINGS_COLS = ["shard", "term", "df", "cf", "block_fn", "block_ftf", "block_fdl",
+                 "block_last", "block_off", "postings", "dls"]
+
+
+def _shard_table(docs):
+    return pa.table({
+        "doc_id": pa.array([d for d, _ in docs], pa.int64()),
+        "text": pa.array([t for _, t in docs], pa.string()),
+    })
+
+
+def _assert_pareto_front(tfs, dls, ftf, fdl):
+    """(ftf, fdl) is exactly the block's Pareto front under (tf up,
+    dl down) dominance: real pairs, tf-descending, none dominated, and
+    every block pair dominated by (or equal to) some front pair."""
+    pairs = set(zip(tfs.tolist(), dls.tolist()))
+    front = list(zip(ftf.tolist(), fdl.tolist()))
+    assert front and all(p in pairs for p in front)
+    assert all(a[0] > b[0] and a[1] > b[1] for a, b in zip(front, front[1:]))
+    for tf, dl in front:
+        assert not any(t >= tf and d <= dl and (t, d) != (tf, dl) for t, d in pairs)
+    for tf, dl in pairs:
+        assert any(t >= tf and d <= dl for t, d in front)
 
 
 def test_build_shard_matches_naive_reference():
     rng = np.random.default_rng(5)
     shard_size, base = 1000, 3000
-    rows = []
-    for term in [f"t{i}" for i in range(40)]:
-        df = int(rng.integers(1, 400))
-        ids = np.sort(rng.choice(shard_size, df, replace=False)) + base
-        for d in ids:
-            rows.append((int(d), term, int(rng.integers(1, 9))))
-    pdf = pd.DataFrame(rows, columns=["doc_id", "term", "tf"]).sample(
-        frac=1, random_state=1
-    )
-    out = _build_shard(pdf.copy(), shard_size)
+    vocab = [f"w{i}" for i in range(40)]
+    p = 1.0 / np.arange(1, len(vocab) + 1)
+    ids = np.sort(rng.choice(shard_size, 700, replace=False)) + base
+    docs = [
+        (int(d), " ".join(rng.choice(vocab, int(rng.integers(0, 30)), p=p / p.sum())))
+        for d in ids
+    ]
+    out = _build_shard_table(_shard_table(docs), shard_size, hygiene=False)
+    assert out.column_names == POSTINGS_COLS  # no other column is written
+    rows = out.to_pylist()
 
-    ref = pdf.sort_values(["term", "doc_id"])
-    dl = ref.groupby("doc_id")["tf"].sum()
-    norms_rows = out[out["term"].isnull()]
-    out = out[out["term"].notnull()]
-    assert sorted(out["term"]) == sorted(ref["term"].unique())
-    for _, r in out.iterrows():
-        g = ref[ref.term == r["term"]]
-        d = g.doc_id.to_numpy()
-        t = g.tf.to_numpy()
-        assert bytes(r["postings"]) == encode_postings(d, t, base=base)
-        assert r["df"] == len(d)
-        dls = dl.loc[d].to_numpy()
+    tf = {d: term_freqs(text) for d, text in docs}
+    dl = {d: sum(c.values()) for d, c in tf.items()}
+    terms = sorted({t for c in tf.values() for t in c})
+    term_rows = [r for r in rows if r["term"] is not None]
+    assert [r["term"] for r in term_rows] == terms
+    assert max(r["df"] for r in term_rows) > 2 * 128  # multi-block terms
+    for r in term_rows:
+        d = np.array([doc for doc in ids if r["term"] in tf[doc]], dtype=np.int64)
+        t = np.array([tf[doc][r["term"]] for doc in d], dtype=np.int64)
+        dls = np.array([dl[doc] for doc in d], dtype=np.int64)
+        assert r["shard"] == base // shard_size
+        assert r["postings"] == encode_postings(d, t, base=base)
+        assert r["df"] == len(d) and r["cf"] == int(t.sum())
         nb = (len(d) + 127) // 128
-        # format 2: per-block (max tf, min dl) integer bounds
-        assert len(r["block_tfmax"]) == nb and len(r["block_dlmin"]) == nb
-        assert len(r["block_last"]) == nb
+        assert len(r["block_last"]) == len(r["block_off"]) == len(r["block_fn"]) == nb
+        f0 = 0
         for b in range(nb):
             sl = slice(b * 128, (b + 1) * 128)
-            assert r["block_tfmax"][b] == t[sl].max()
-            assert r["block_dlmin"][b] == dls[sl].min()
-            assert r["block_last"][b] == d[min((b + 1) * 128, len(d)) - 1]
-        dd, tt = decode_postings(bytes(r["postings"]), base=base)
+            assert r["block_last"][b] == d[sl][-1]
+            assert r["block_off"][b] == len(encode_postings(d[: b * 128], t[: b * 128], base))
+            f1 = f0 + r["block_fn"][b]
+            _assert_pareto_front(
+                t[sl], dls[sl], np.array(r["block_ftf"][f0:f1]), np.array(r["block_fdl"][f0:f1])
+            )
+            f0 = f1
+        assert f0 == len(r["block_ftf"]) == len(r["block_fdl"])
+        dd, tt = decode_postings(r["postings"], base=base)
         assert (dd == d).all() and (tt == t).all()
     # the norms pseudo row: one per shard, dls blob == exact doc lengths
+    norms_rows = [r for r in rows if r["term"] is None]
     assert len(norms_rows) == 1
-    nr = norms_rows.iloc[0]
-    from tlgs_spark.indexer.codec import decode_varints
-
-    dls_arr = decode_varints(bytes(nr["dls"]))
-    assert len(dls_arr) == shard_size and nr["block_last"][0] == base
-    assert int(nr["cf"]) == int(ref["tf"].sum())
-    for doc, want in dl.items():
-        assert dls_arr[doc - base] == want
+    nr = norms_rows[0]
+    dls_arr = decode_varints(nr["dls"])
+    assert len(dls_arr) == shard_size and nr["block_last"] == [base]
+    assert nr["df"] == shard_size and nr["cf"] == sum(dl.values())
+    want = np.zeros(shard_size, dtype=np.int64)
+    for doc, n in dl.items():
+        want[doc - base] = n
+    assert (dls_arr == want).all()
+    assert nr["postings"] is None and nr["block_fn"] is None
 
 
 def test_single_term_shard():
-    pdf = pd.DataFrame({"doc_id": [10, 11, 12], "term": ["x"] * 3, "tf": [1, 2, 3]})
-    out = _build_shard(pdf, 100)
-    out_t = out[out["term"].notnull()]
+    docs = [(10, "zebra"), (11, "zebra zebra"), (12, "zebra zebra zebra")]
+    out = _build_shard_table(_shard_table(docs), 100, hygiene=False).to_pylist()
+    out_t = [r for r in out if r["term"] is not None]
     assert len(out_t) == 1 and len(out) == 2  # + the norms pseudo row
-    d, t = decode_postings(bytes(out_t["postings"].iloc[0]), base=0)
+    d, t = decode_postings(out_t[0]["postings"], base=0)
     assert d.tolist() == [10, 11, 12] and t.tolist() == [1, 2, 3]
+    # an all-stopword shard writes the norms pseudo row alone
+    empty = _build_shard_table(_shard_table([(105, "the and of")]), 100, hygiene=False)
+    assert empty.column_names == POSTINGS_COLS
+    assert empty.to_pylist()[0]["term"] is None and empty.num_rows == 1
 
 
 TRICKY_DOCS = [

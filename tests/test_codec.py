@@ -7,7 +7,6 @@ from hypothesis import strategies as st
 
 from tlgs_spark.indexer.codec import (
     decode_postings,
-    decode_postings_batch,
     decode_varints,
     encode_postings,
     encode_varints,
@@ -75,40 +74,6 @@ def test_unsorted_doc_ids_pay_wraparound_penalty():
     assert (d == docs).all()
     sorted_buf = encode_postings(np.array([3, 5]), tfs)
     assert len(buf) > 2 * len(sorted_buf)
-
-
-@given(
-    st.lists(
-        st.sets(st.integers(min_value=0, max_value=9_999), min_size=0, max_size=60),
-        min_size=1,
-        max_size=8,
-    )
-)
-@settings(max_examples=50, deadline=None)
-def test_batch_decode_matches_per_segment(doc_sets):
-    """decode_postings_batch over concatenated shard blobs must equal the
-    per-segment decode loop, including empty segments mid-stream."""
-    shard_size = 10_000
-    blobs, dfs, bases = [], [], []
-    want_d, want_t = [], []
-    for shard, ds in enumerate(doc_sets):
-        base = shard * shard_size
-        docs = np.array(sorted(ds), dtype=np.int64) + base
-        tfs = (docs % 13 + 1).astype(np.int64)
-        blobs.append(encode_postings(docs, tfs, base=base))
-        dfs.append(len(docs))
-        bases.append(base)
-        want_d.append(docs)
-        want_t.append(tfs)
-    d, t = decode_postings_batch(blobs, np.array(dfs), np.array(bases))
-    assert d.tolist() == np.concatenate(want_d).tolist()
-    assert t.tolist() == np.concatenate(want_t).tolist()
-
-
-def test_batch_decode_empty_first_segment():
-    blobs = [b"", encode_postings(np.array([7, 9]), np.array([2, 3]), base=5)]
-    d, t = decode_postings_batch(blobs, np.array([0, 2]), np.array([0, 5]))
-    assert d.tolist() == [7, 9] and t.tolist() == [2, 3]
 
 
 @pytest.mark.parametrize("n", [1, 127, 128, 129, 1000])

@@ -32,8 +32,13 @@ def test_open_query_close_cycles_hold_fd_count(spark, index_dir):
 def test_close_is_idempotent_and_index_survives(spark, index_dir):
     si = SearchIndex(spark, index_dir)
     r1 = si.search("tok0000", k=5)
+    si._pf_cache["term_stats"] = None  # one lookup via the dataset cache
+    si._term_info(["tok0003"])
+    assert si._term_cache and si._tinfo_cache and si._arrow_cache
     si.close()
     si.close()  # idempotent
+    # close() releases every term cache, not just the decoded postings
+    assert not si._term_cache and not si._tinfo_cache and not si._arrow_cache
     r2 = si.search("tok0000", k=5)  # lazy caches rebuild after close
     assert list(r1["doc_id"]) == list(r2["doc_id"])
     si.close()

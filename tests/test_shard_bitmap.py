@@ -180,23 +180,3 @@ def test_delta_update_maintains_exact_bitmaps(spark, tmp_path):
         pd.testing.assert_frame_equal(
             si.search(q, k=10, mode=m), si_full.search(q, k=10, mode=m)
         )
-
-
-def test_legacy_index_without_bitmap_column(spark, tmp_path):
-    """A pre-bitmap term_stats (no shard_bits column) keeps working:
-    presence falls back to the explicit list / None contract."""
-    idx = str(tmp_path / "idx_bits_legacy")
-    build_index(spark, _mid_corpus(spark), idx, n_shards=100)
-    st = IndexStorage(idx)
-    legacy = st.read(spark, "term_stats").drop("shard_bits").toPandas()
-    import shutil
-
-    tdir = st.path("term_stats")
-    shutil.rmtree(tdir)
-    spark.createDataFrame(legacy).write.parquet(tdir)
-    si = SearchIndex(spark, idx)
-    info = si._term_info(["midterm", "rareterm"])
-    assert info["midterm"][1] is None  # >64 shards, no bitmap → unknown
-    assert len(info["rareterm"][1]) == 1  # list survives
-    r = si.search("midterm rareterm", k=5, mode="and")
-    assert len(r) == 1

@@ -218,11 +218,12 @@ def _engine_index(spark: SparkSession, sf_dir: str):
     DuckDB oracle address identical documents.
 
     The built index is cached ON DISK keyed by a fingerprint of the
-    source parquet (path, size, mtime) + analyzer version: the ~30
-    Spark jobs of a full build cost ~10 s per bench session for a
-    5k-doc corpus, which polluted the recorded entry time with harness
-    cost (r2 VERDICT). A fingerprint mismatch (driver regenerated the
-    test data, analyzer spec bumped) rebuilds from scratch."""
+    source parquet (path, size, mtime) + analyzer version + postings
+    format: the ~30 Spark jobs of a full build cost ~10 s per bench
+    session for a 5k-doc corpus, which polluted the recorded entry time
+    with harness cost (r2 VERDICT). A fingerprint mismatch (driver
+    regenerated the test data, analyzer spec or postings format
+    bumped) rebuilds from scratch."""
     key = (id(spark), sf_dir)
     hit = _ENGINE_IDX_CACHE.get(key)
     if hit is not None:
@@ -233,7 +234,7 @@ def _engine_index(spark: SparkSession, sf_dir: str):
     import shutil
     import tempfile
 
-    from .indexer.build import build_index
+    from .indexer.build import POSTINGS_FORMAT, build_index
     from .query.engine import SearchIndex
     from .tokenizer import ANALYZER_VERSION
 
@@ -241,7 +242,8 @@ def _engine_index(spark: SparkSession, sf_dir: str):
     st_ = os.stat(src)
     fp = json.dumps(
         {"src": os.path.abspath(src), "size": st_.st_size,
-         "mtime_ns": st_.st_mtime_ns, "analyzer": ANALYZER_VERSION, "n_shards": 8},
+         "mtime_ns": st_.st_mtime_ns, "analyzer": ANALYZER_VERSION,
+         "postings_format": POSTINGS_FORMAT, "n_shards": 8},
         sort_keys=True,
     )
     tag = hashlib.sha256(fp.encode()).hexdigest()[:16]

@@ -18,9 +18,11 @@ Design (scale-first):
   doc_id ranges make delta-gaps small (better varint compression) and
   segment "merge" across shards is free concatenation in shard order
   (the postings table itself is the merged index).
-- **One Arrow pass per shard**: ``groupBy(shard).applyInPandas`` builds
-  every term's delta+varint posting list, block maxes (BLOCK_SIZE=128)
-  and shard norms in NumPy — no per-row Python.
+- **One Arrow pass per shard**: the postings scan streams whole shards
+  into ``mapInArrow`` (``groupBy(shard).applyInArrow`` when the docs
+  layout cannot prove shard contiguity), which builds every term's
+  delta+varint posting list, per-block (BLOCK_SIZE=128) metadata and
+  the shard norms in NumPy — no per-row Python.
 - **Resumable**: per-shard checkpoint ledger with lineage + build
   metrics (postings/sec, bytes, skew factor). Re-run = left-anti
   against the ledger; a shard killed mid-write is simply rebuilt
@@ -50,45 +52,45 @@ from ..tokenizer import (
 )
 from ..utils import parse_byte_size
 from .codec import encode_varints
-from .storage import IndexStorage
+from .storage import POSTINGS_SCHEMA, IndexStorage
 
-# postings format 2 (meta["postings_format"]): block bounds are stored
-# as per-block (max tf, min dl) INTEGERS instead of a precomputed
-# tf_norm float — the bound tfn(max_tf, min_dl) is computed at query
-# time from avgdl (tfn is increasing in tf, decreasing in dl, so it
-# dominates every element of the block: still admissible, WAND still
-# exact). This removes the builder's dependency on global avgdl, which
-# lets ONE tokenize pass produce postings + doc lengths together — the
-# v1 build tokenized the whole corpus twice (a full extra pass at
-# 100 TB). The shard's doc lengths ride along as one term=NULL pseudo
-# row per shard (dls = varint blob, cf = Σdl, block_last = [base]);
-# finalize extracts them into the norms/doc_lengths/collection_stats
-# tables with column-pruned metadata scans.
-# postings format 3 adds true block-skipping (block-max WAND):
-# - ``block_off`` — the byte offset of each 128-posting block's first
-#   varint within the term's blob, so the query side can decode ONLY
-#   the blocks whose bound clears the running top-k threshold θ (at
-#   10^12 docs a dense term's multi-GB blob must never be fully
-#   decoded for a top-10 query);
+# postings format 4 (meta["postings_format"]): one row per (shard,
+# term) holding the delta-gap + varint blob (``postings``) and its
+# block metadata, one 128-posting block per entry:
+# - ``block_last`` — the block's last doc id (skip pointer);
+# - ``block_off`` — the byte offset of the block's first varint within
+#   the blob, so the query side decodes ONLY the blocks whose bound
+#   clears the running top-k threshold θ (block-max WAND);
 # - ``block_fn``/``block_ftf``/``block_fdl`` — each block's PARETO
-#   FRONT of real (tf, dl) pairs (max tf, min dl dominance; fronts
-#   flattened per term, block_fn = per-block front length). The
-#   format-2 (max tf, min dl) bound combines the best tf and best dl
-#   from DIFFERENT docs and is so loose it prunes nothing on
-#   short-document corpora; the front's max tf_norm over REAL pairs is
-#   the block's exact score ceiling for ANY avgdl — still avgdl-free
-#   at build time (dominance in (tf↑, dl↓) is avgdl-independent), so
-#   the build stays one-pass. Readers of format-2 indexes never see
-#   the columns and take the eager whole-blob decode path.
-POSTINGS_FORMAT = 3
-POSTINGS_SCHEMA = (
-    "shard int, term string, df long, cf long, "
-    "block_tfmax array<long>, block_dlmin array<long>, "
-    "block_fn array<long>, block_ftf array<long>, block_fdl array<long>, "
-    "block_last array<long>, block_off array<long>, "
-    "postings binary, dls binary"
-)
-NORMS_SCHEMA = "shard int, base long, n long, dls binary"
+#   FRONT of real (tf, dl) pairs under (tf↑, dl↓) dominance, flattened
+#   per term (block_fn = per-block front length). The front's max
+#   tf_norm is the block's exact score ceiling for ANY avgdl, so the
+#   build needs no global statistic and tokenizes the corpus once.
+# Each shard also carries one term=NULL norms pseudo row (df = slot
+# count, cf = Σdl, block_last = [base], dls = the shard's doc-length
+# varint blob); finalize extracts norms/doc_lengths/collection_stats
+# from it with column-pruned metadata scans.
+POSTINGS_FORMAT = 4
+
+# index_meta "docs_layout" attestation: docs live in hive ``shard=``
+# partition dirs, one whole shard per file, doc_id-sorted within each
+# file — the stream fast path's precondition AND the unit of
+# incremental reuse (a delta update rewrites only changed shards'
+# dirs; the rest are carried by manifest reference, storage.py).
+DOCS_LAYOUT_SHARDED = "sharded_sorted_v2"
+
+
+def index_meta_current(meta: dict) -> bool:
+    """True when an index's meta matches what this code writes: the
+    postings format, the docs layout and the analyzer. The one gate
+    for every reader and writer of an existing index — an index that
+    fails it must be rebuilt, never read or extended."""
+    return (
+        meta.get("postings_format") == POSTINGS_FORMAT
+        and meta.get("docs_layout") == DOCS_LAYOUT_SHARDED
+        and meta.get("tokenizer") == ANALYZER_VERSION
+    )
+
 
 # term_stats keeps an explicit shard list only for terms present in at
 # most this many shards (scan pruning for selective queries; NULL for
@@ -107,6 +109,10 @@ TERM_SHARDS_MAX = 64
 # (dense blobs overflow into their own oversized group — see the
 # write site).
 POSTINGS_ROW_GROUP_BYTES = 131072
+# parquet-mr checks the buffered size every this many records (default
+# 100), so runs of small rows close their groups near the target
+# instead of 10x past it
+POSTINGS_PAGE_CHECK_MIN = 8
 
 # Fresh builds attach doc_ids with a BROADCAST of the ranked
 # (conv_id, turn_idx) -> doc_id map when the corpus is small enough
@@ -128,15 +134,6 @@ POSTINGS_ROW_GROUP_BYTES = 131072
 # extra full-row shuffle is the cheaper trade at every scale we can
 # measure.
 FUSED_ASSIGN_MAX_DOCS = 8_000_000
-
-# index_meta "docs_layout" attestation: docs live in hive ``shard=``
-# partition dirs, one whole shard per file, doc_id-sorted within each
-# file — the stream fast path's precondition AND the unit of
-# incremental reuse (a delta update rewrites only changed shards'
-# dirs; the rest are carried by manifest reference, storage.py).
-# v1 (flat hash-partitioned files, ≤ r3) indexes fail this check and
-# take the groupBy fallback — still correct, just re-shuffled.
-DOCS_LAYOUT_SHARDED = "sharded_sorted_v2"
 
 # postings-loop scan sizing: pack docs files into roughly this many
 # scan tasks per core — enough waves to absorb stragglers while paying
@@ -311,26 +308,6 @@ def _tokenize_batch_arrays(
     return doc_idx[keep], inv[codes[keep]], su
 
 
-def tokenize_doc_lengths(docs: DataFrame, hygiene: bool = False) -> DataFrame:
-    """(doc_id, text) → (doc_id, dl): per-doc kept-token counts, one
-    tiny output row per document — NO (doc, term) rows ever enter a
-    shuffle. The prepare phase needs only doc lengths (avgdl/norms);
-    materializing + shuffling the full token stream for them cost more
-    than re-tokenizing inside the shard builder does."""
-
-    def tok(batches):
-        for pdf in batches:
-            doc_k, _, _ = _tokenize_batch_arrays(pdf["text"], hygiene)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy(),
-                    "dl": np.bincount(doc_k, minlength=len(pdf)).astype(np.int64),
-                }
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(tok, schema="doc_id long, dl long")
-
-
 def tokenize_tokens(docs: DataFrame, hygiene: bool = False, with_dl: bool = False) -> DataFrame:
     """The build's tokenizer: Arrow-batched pandas rendering of the
     frozen spec — one C-level regex pass per batch (docs joined by a
@@ -380,14 +357,14 @@ def tokenize_tokens(docs: DataFrame, hygiene: bool = False, with_dl: bool = Fals
 
 
 # ---------------------------------------------------------------------------
-# per-shard segment build (applyInPandas body)
+# per-shard segment build (mapInArrow / applyInArrow body)
 # ---------------------------------------------------------------------------
 
 def _block_fronts(
     tfs: np.ndarray, dls: np.ndarray, bstarts: np.ndarray, n_all: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Per-block Pareto fronts of real (tf, dl) pairs under (tf↑, dl↓)
-    dominance — the avgdl-free exact block score ceiling (format 3).
+    dominance — the avgdl-free exact block score ceiling.
     Vectorized across ALL blocks of the shard: one sort by
     (block, -tf, dl), then a segmented running-min of dl (the offset
     trick keeps segments independent); an entry joins the front iff its
@@ -436,156 +413,6 @@ def _block_fronts(
     return fn, tf_s[keep], dl_s[keep]
 
 
-def _build_shard(pdf: pd.DataFrame, shard_size: int) -> pd.DataFrame:
-    """All (doc_id, term, tf) rows of ONE shard → one postings row per
-    term (delta+varint postings, per-128-block (max tf, min dl) integer
-    bounds, block last-doc skip pointers) + ONE term=NULL norms pseudo
-    row carrying the shard's doc-length array as a varint blob
-    (cf = Σdl, block_last = [base]). No global statistic is needed —
-    tf_norm bounds are derived from (max_tf, min_dl) + avgdl at query
-    time — so the build tokenizes the corpus exactly once.
-
-    Fully vectorized: the whole shard's interleaved (gap, tf) stream is
-    varint-encoded in ONE NumPy pass and sliced per term by byte
-    offsets; block bounds/lasts come from ufunc.reduceat over global
-    block boundaries. The only Python loop assembles output rows.
-    """
-    shard = int(pdf["doc_id"].iloc[0]) // shard_size
-    base = shard * shard_size
-    pdf = pdf.sort_values(["term", "doc_id"], kind="mergesort")
-    doc_ids = pdf["doc_id"].to_numpy(np.int64)
-    tfs = pdf["tf"].to_numpy(np.int64)
-    n_all = len(doc_ids)
-
-    # shard-local doc lengths (every posting of a doc lives in its shard)
-    dl_lookup = np.zeros(shard_size, dtype=np.int64)
-    np.add.at(dl_lookup, doc_ids - base, tfs)
-    dls = dl_lookup[doc_ids - base]
-
-    terms = pdf["term"].to_numpy()
-    bound = np.nonzero(terms[1:] != terms[:-1])[0] + 1
-    starts = np.concatenate(([0], bound))
-    ends = np.concatenate((bound, [n_all]))
-    seg_len = ends - starts
-
-    # delta gaps with reset at each term start
-    prev = np.empty(n_all, dtype=np.int64)
-    prev[1:] = doc_ids[:-1]
-    prev[starts] = base
-    gaps = doc_ids - prev
-
-    inter = np.empty(n_all * 2, dtype=np.uint64)
-    inter[0::2] = gaps.astype(np.uint64)
-    inter[1::2] = tfs.astype(np.uint64)
-    buf, vlen = encode_varints(inter, return_lengths=True)
-    # bytes per term = sum of its 2*seg_len value lengths
-    term_bytes = np.add.reduceat(vlen, starts * 2)
-    byte_ends = np.cumsum(term_bytes)
-    byte_starts = byte_ends - term_bytes
-
-    # collection frequency (Σ tf) — cf rolls up into term_stats after
-    # the build, saving a full token-stream aggregate
-    cf = np.add.reduceat(tfs, starts)
-
-    # global block boundaries: within each term, blocks of BLOCK_SIZE
-    bs = bm25.BLOCK_SIZE
-    pos_in_seg = np.arange(n_all) - np.repeat(starts, seg_len)
-    is_block_start = (pos_in_seg % bs) == 0
-    bstarts = np.nonzero(is_block_start)[0]
-    btfmax = np.maximum.reduceat(tfs, bstarts)
-    bdlmin = np.minimum.reduceat(dls, bstarts)
-    bends = np.concatenate((bstarts[1:], [n_all])) - 1
-    blast_all = doc_ids[bends]
-    nb_per_term = (seg_len + bs - 1) // bs
-    nb_ends = np.cumsum(nb_per_term)
-    nb_starts = nb_ends - nb_per_term
-    # format 3: per-block byte offsets within each term's blob — the
-    # byte position of value index 2·block_start, rebased per term
-    cumv = np.concatenate(([0], np.cumsum(vlen)))
-    boff_all = cumv[bstarts * 2] - np.repeat(byte_starts, nb_per_term)
-    # format 3: per-block (tf, dl) Pareto fronts (exact block bound)
-    fn_all, ftf_all, fdl_all = _block_fronts(tfs, dls, bstarts, n_all)
-    fcum = np.concatenate(([0], np.cumsum(fn_all)))
-
-    rows = []
-    for i in range(len(starts)):
-        f0 = fcum[nb_starts[i]]
-        f1 = fcum[nb_ends[i]]
-        rows.append(
-            (
-                shard,
-                terms[starts[i]],
-                int(seg_len[i]),
-                int(cf[i]),
-                btfmax[nb_starts[i] : nb_ends[i]],
-                bdlmin[nb_starts[i] : nb_ends[i]],
-                fn_all[nb_starts[i] : nb_ends[i]],
-                ftf_all[f0:f1],
-                fdl_all[f0:f1],
-                blast_all[nb_starts[i] : nb_ends[i]],
-                boff_all[nb_starts[i] : nb_ends[i]],
-                buf[byte_starts[i] : byte_ends[i]],
-                None,
-            )
-        )
-    # the norms pseudo row: term NULL, df = slot count, cf = Σdl (an
-    # exact long — collection totals sum these), block_last = [base]
-    rows.append(
-        (
-            shard,
-            None,
-            int(shard_size),
-            int(dl_lookup.sum()),
-            None,
-            None,
-            None,
-            None,
-            None,
-            np.asarray([base], dtype=np.int64),
-            None,
-            None,
-            encode_varints(dl_lookup),
-        )
-    )
-    return pd.DataFrame(rows, columns=_POSTINGS_COLS)
-
-
-_POSTINGS_COLS = ["shard", "term", "df", "cf", "block_tfmax", "block_dlmin",
-                  "block_fn", "block_ftf", "block_fdl",
-                  "block_last", "block_off", "postings", "dls"]
-
-
-def _build_shard_from_docs(
-    pdf: pd.DataFrame, shard_size: int, hygiene: bool
-) -> pd.DataFrame:
-    """One shard's DOCS (doc_id, text) → its postings rows: tokenize
-    in-place with the frozen batch tokenizer, then delegate to
-    _build_shard. Shuffling raw docs by shard moves ~3× fewer bytes
-    than shuffling the exploded (doc_id, term, tf) stream, and the
-    token stream never has to be persisted between phases — the ONE
-    tokenize pass happens here, where its output is consumed."""
-    doc_k, codes_k, u = _tokenize_batch_arrays(pdf["text"], hygiene)
-    if codes_k.size == 0:  # all-stopword/empty shard: norms row only
-        shard = int(pdf["doc_id"].iloc[0]) // shard_size
-        base = shard * shard_size
-        return pd.DataFrame(
-            [(shard, None, int(shard_size), 0, None, None, None, None, None,
-              np.asarray([base], dtype=np.int64), None, None,
-              encode_varints(np.zeros(shard_size, dtype=np.int64)))],
-            columns=_POSTINGS_COLS,
-        )
-    key = doc_k.astype(np.int64) * len(u) + codes_k
-    uk, counts = np.unique(key, return_counts=True)
-    tok_pdf = pd.DataFrame(
-        {
-            "doc_id": pdf["doc_id"].to_numpy()[uk // len(u)],
-            "term": u[uk % len(u)],
-            "tf": counts,
-        }
-    )
-    return _build_shard(tok_pdf, shard_size)
-
-
 def _expected_shard_docs(
     shard: int, shard_size: int, doc_ceiling: int, expect_counts: dict | None
 ) -> int:
@@ -599,23 +426,50 @@ def _expected_shard_docs(
     return min(shard_size, doc_ceiling - shard * shard_size)
 
 
+def _norms_row(shard: int, shard_size: int, dl_lookup: np.ndarray):
+    """The shard's norms pseudo row (term NULL): df = slot count,
+    cf = Σdl (an exact long — collection totals sum these),
+    block_last = [base], dls = the shard's doc-length varint blob."""
+    import pyarrow as pa
+
+    lists = pa.nulls(1, pa.list_(pa.int64()))
+    return pa.table(
+        {
+            "shard": pa.array([shard], pa.int32()),
+            "term": pa.nulls(1, pa.string()),
+            "df": pa.array([int(shard_size)], pa.int64()),
+            "cf": pa.array([int(dl_lookup.sum())], pa.int64()),
+            "block_fn": lists,
+            "block_ftf": lists,
+            "block_fdl": lists,
+            "block_last": pa.array([[shard * shard_size]], pa.list_(pa.int64())),
+            "block_off": lists,
+            "postings": pa.nulls(1, pa.binary()),
+            "dls": pa.array([encode_varints(dl_lookup)], pa.binary()),
+        }
+    )
+
+
 def _build_shard_table(table, shard_size: int, hygiene: bool,
                        n_docs: int | None = None,
                        expect_counts: dict | None = None):
-    """Arrow-native twin of ``_build_shard_from_docs`` — identical
-    rows in identical order (pinned by test_build_vectorized), but the
-    hot path never round-trips through pandas object columns:
+    """One shard's DOCS (doc_id, text) as an Arrow table → its postings
+    rows (format 4): tokenize in place with the frozen batch tokenizer,
+    then one row per term (delta+varint postings, per-128-block skip
+    pointers, byte offsets and (tf, dl) Pareto fronts) plus the norms
+    pseudo row. Pinned against a naive per-term reference by
+    test_build_vectorized. Fully vectorized:
 
     - (term, doc) aggregation AND the (term, doc_id) sort collapse
       into ONE ``np.unique`` over the flipped key
       ``code * shard_size + (doc_id - base)`` (stemmed-term codes are
       already in lexicographic order because np.unique sorted the
-      vocabulary), replacing the pandas string mergesort;
-    - the output block/postings columns are built zero-copy:
+      vocabulary);
+    - the whole shard's interleaved (gap, tf) stream is varint-encoded
+      in ONE pass and the output columns are built zero-copy:
       ``pa.ListArray.from_arrays`` over the reduceat outputs and a
-      binary array whose data buffer IS the batch varint buffer —
-      no per-term Python loop, no object-array DataFrame for Spark
-      to re-convert.
+      binary array whose data buffer IS the batch varint buffer — no
+      per-term Python loop.
     """
     import pyarrow as pa
 
@@ -640,27 +494,8 @@ def _build_shard_table(table, shard_size: int, hygiene: bool,
                 f"or a corrupt docs table"
             )
 
-    def _pseudo(dl_lookup: np.ndarray) -> "pa.Table":
-        return pa.table(
-            {
-                "shard": pa.array([shard], pa.int32()),
-                "term": pa.nulls(1, pa.string()),
-                "df": pa.array([int(shard_size)], pa.int64()),
-                "cf": pa.array([int(dl_lookup.sum())], pa.int64()),
-                "block_tfmax": pa.nulls(1, pa.list_(pa.int64())),
-                "block_dlmin": pa.nulls(1, pa.list_(pa.int64())),
-                "block_fn": pa.nulls(1, pa.list_(pa.int64())),
-                "block_ftf": pa.nulls(1, pa.list_(pa.int64())),
-                "block_fdl": pa.nulls(1, pa.list_(pa.int64())),
-                "block_last": pa.array([[base]], pa.list_(pa.int64())),
-                "block_off": pa.nulls(1, pa.list_(pa.int64())),
-                "postings": pa.nulls(1, pa.binary()),
-                "dls": pa.array([encode_varints(dl_lookup)], pa.binary()),
-            }
-        )
-
     if codes_k.size == 0:  # all-stopword/empty shard: norms row only
-        return _pseudo(np.zeros(shard_size, dtype=np.int64))
+        return _norms_row(shard, shard_size, np.zeros(shard_size, dtype=np.int64))
 
     dl_lookup = np.bincount(
         doc_ids_np[doc_k] - base, minlength=shard_size
@@ -695,16 +530,14 @@ def _build_shard_table(table, shard_size: int, hygiene: bool,
     bs = bm25.BLOCK_SIZE
     pos_in_seg = np.arange(n_all) - np.repeat(starts, seg_len)
     bstarts = np.nonzero((pos_in_seg % bs) == 0)[0]
-    btfmax = np.maximum.reduceat(tfs, bstarts)
-    bdlmin = np.minimum.reduceat(dls, bstarts)
     bends = np.concatenate((bstarts[1:], [n_all])) - 1
     blast_all = doc_ids[bends]
     nb_per_term = (seg_len + bs - 1) // bs
     nb_ends = np.cumsum(nb_per_term)
-    # format 3: per-block byte offsets within each term's blob
+    # per-block byte offsets within each term's blob
     cumv = np.concatenate(([0], np.cumsum(vlen)))
     boff_all = cumv[bstarts * 2] - np.repeat(byte_ends - term_bytes, nb_per_term)
-    # format 3: per-block (tf, dl) Pareto fronts (exact block bound)
+    # per-block (tf, dl) Pareto fronts (exact block bound)
     fn_all, ftf_all, fdl_all = _block_fronts(tfs, dls, bstarts, n_all)
     fcum = np.concatenate(([0], np.cumsum(fn_all)))
 
@@ -740,8 +573,6 @@ def _build_shard_table(table, shard_size: int, hygiene: bool,
             "term": pa.array(su[term_code[starts]].tolist(), pa.string()),
             "df": pa.array(seg_len.astype(np.int64)),
             "cf": pa.array(cf.astype(np.int64)),
-            "block_tfmax": _list_arr(btfmax),
-            "block_dlmin": _list_arr(bdlmin),
             "block_fn": _list_arr(fn_all),
             "block_ftf": _front_arr(ftf_all),
             "block_fdl": _front_arr(fdl_all),
@@ -751,7 +582,7 @@ def _build_shard_table(table, shard_size: int, hygiene: bool,
             "dls": pa.nulls(n_terms, pa.binary()),
         }
     )
-    return pa.concat_tables([main, _pseudo(dl_lookup)])
+    return pa.concat_tables([main, _norms_row(shard, shard_size, dl_lookup)])
 
 
 def _postings_stream(batches, shard_size: int, hygiene: bool, n_docs: int,
@@ -811,12 +642,6 @@ def _docs_data_files(st: IndexStorage) -> list | None:
                     for e in os.scandir(base)
                     if e.is_dir() and e.name.startswith("shard=")
                 ]
-                # v1 flat layout: data files directly under the base
-                out.extend(
-                    e
-                    for e in os.scandir(base)
-                    if e.is_file() and not e.name.startswith((".", "_"))
-                )
             else:
                 dirs = [os.path.join(base, f"shard={s}") for s in shards]
             for d in dirs:
@@ -933,13 +758,14 @@ def build_index(
     same pass) → finalize (norms/doc_lengths/collection_stats/
     term_stats extracted from postings metadata).
 
-    ``resume=True`` skips shards already in the checkpoint ledger.
+    ``resume=True`` skips shards already in the checkpoint ledger; an
+    existing index whose meta fails ``index_meta_current`` or was built
+    with a different ``hygiene`` is rebuilt fresh instead.
     ``max_shards_to_build`` lets tests simulate a mid-build kill.
     The crawler.cpp:424-429 change-detection analog lives at SHARD
     granularity in streaming/incremental.py: unchanged shards are
     carried by manifest reference, so neither their text nor their dls
-    are ever touched again (format 2 removed the separate dl pass the
-    old per-text reuse used to accelerate).
+    are ever touched again.
     ``storage`` lets the incremental path pass an IndexStorage with
     STAGED table versions (see storage.py) so recomputed tables land
     in new version dirs while readers keep the committed ones.
@@ -1006,6 +832,18 @@ def _build_index_impl(
     doc_ceiling: int | None = None,
 ) -> dict:
     st = storage if storage is not None else IndexStorage(index_dir)
+    if resume:
+        # resume only over an index this code wrote, with the same
+        # hygiene: resuming over a stale meta would return the old
+        # index untouched or mix its shard files with new ones
+        try:
+            prev = st.read_meta()
+        except FileNotFoundError:
+            prev = None
+        if prev is not None and not (
+            index_meta_current(prev) and prev.get("hygiene", False) == hygiene
+        ):
+            resume = False
 
     def _expire_stale_log() -> None:
         # a DIRECT build rewrites the committed versions' files IN
@@ -1132,9 +970,9 @@ def _build_index_impl(
         if storage is None:
             for _t in ("docs", "first_turn_terms"):
                 st.remove_manifest(_t)
-        # (format 2: no separate dl pass — doc lengths fall out of the
-        # postings pass as per-shard norms pseudo rows; norms /
-        # doc_lengths / collection_stats are extracted at finalize)
+        # (no separate dl pass — doc lengths fall out of the postings
+        # pass as per-shard norms pseudo rows; norms / doc_lengths /
+        # collection_stats are extracted at finalize)
         # ONE text shuffle for the whole build: hash-repartition by
         # shard, sort each partition by doc_id, write. Because every
         # shard lives wholly inside one write task (hash partitioning
@@ -1350,27 +1188,10 @@ def _build_index_impl(
     for i in range(0, len(pending), shard_batch):
         batch = pending[i : i + shard_batch]
         tb0 = time.time()
-        # merge consecutive shards into doc_id ranges (usually ONE
-        # range — avoids an O(n_shards)-clause predicate)
-        if "shard" in docs_r.columns:
-            # hive-layout docs (v2): filter on the PARTITION column —
-            # Spark prunes to exactly the batch's shard= dirs, so a
-            # delta rebuild of 3 shards scans 3 dirs, not the corpus
-            cond = F.col("shard").isin([int(s) for s in batch])
-        else:
-            # legacy flat layout: doc_id range predicate (row-group
-            # pruned via footer stats)
-            runs: list[list[int]] = []
-            for s in batch:
-                if runs and s == runs[-1][1]:
-                    runs[-1][1] = s + 1
-                else:
-                    runs.append([s, s + 1])
-            cond = F.lit(False)
-            for a, b in runs:
-                cond = cond | (
-                    (F.col("doc_id") >= a * shard_size) & (F.col("doc_id") < b * shard_size)
-                )
+        # filter on the hive PARTITION column — Spark prunes to exactly
+        # the batch's shard= dirs, so a delta rebuild of 3 shards scans
+        # 3 dirs, not the corpus
+        cond = F.col("shard").isin([int(s) for s in batch])
         # tokenize + encode inside the shard builder — raw text is ~3×
         # fewer shuffle bytes than the exploded token stream (and on
         # the fresh-layout stream path it never shuffles at all)
@@ -1414,16 +1235,11 @@ def _build_index_impl(
         # the point is that SELECTIVE groups stay small, and a group
         # that is one dense blob decompresses only for queries that
         # want that blob anyway.
-        w = seg.write.mode("overwrite").partitionBy("shard").option(
+        seg.write.mode("overwrite").partitionBy("shard").option(
             "parquet.block.size", POSTINGS_ROW_GROUP_BYTES
-        )
-        check_min = os.environ.get("TLGS_POSTINGS_PAGE_CHECK_MIN", "8")
-        if check_min:
-            # check the buffered size every few records (default 100)
-            # so small-row runs close their groups near the target
-            # instead of 10x past it
-            w = w.option("parquet.page.size.row.check.min", int(check_min))
-        w.parquet(st.path("postings"))
+        ).option(
+            "parquet.page.size.row.check.min", POSTINGS_PAGE_CHECK_MIN
+        ).parquet(st.path("postings"))
         _mark("postings")
         elapsed = time.time() - tb0
 
@@ -1841,34 +1657,16 @@ def write_empty_shard_partition(
 ) -> None:
     """One pseudo-row postings partition for an in-grid shard whose
     live doc set is EMPTY (gapped ids: every doc in its range deleted).
-    Format 2+: every in-grid shard carries its norms pseudo row —
-    df = slot count, cf = Σdl = 0, dls = all-zero varints — so finalize
-    and the dl array see the shard's slots as zero-length docs."""
-    import pyarrow as pa
+    Every in-grid shard carries its norms pseudo row — df = slot count,
+    cf = Σdl = 0, dls = all-zero varints — so finalize and the dl array
+    see the shard's slots as zero-length docs. The ``shard`` column is
+    the hive partition dir, not a file column."""
     import pyarrow.parquet as pq
-
-    from .codec import encode_varints as _enc
 
     d = os.path.join(st.table_dir("postings", postings_version), f"shard={shard}")
     os.makedirs(d, exist_ok=True)
-    tbl = pa.table(
-        {
-            "term": pa.nulls(1, pa.string()),
-            "df": pa.array([int(shard_size)], pa.int64()),
-            "cf": pa.array([0], pa.int64()),
-            "block_tfmax": pa.nulls(1, pa.list_(pa.int64())),
-            "block_dlmin": pa.nulls(1, pa.list_(pa.int64())),
-            "block_fn": pa.nulls(1, pa.list_(pa.int64())),
-            "block_ftf": pa.nulls(1, pa.list_(pa.int64())),
-            "block_fdl": pa.nulls(1, pa.list_(pa.int64())),
-            "block_last": pa.array([[shard * shard_size]], pa.list_(pa.int64())),
-            "block_off": pa.nulls(1, pa.list_(pa.int64())),
-            "postings": pa.nulls(1, pa.binary()),
-            "dls": pa.array(
-                [_enc(np.zeros(shard_size, dtype=np.int64))], pa.binary()
-            ),
-        }
-    )
+    zeros = np.zeros(shard_size, dtype=np.int64)
+    tbl = _norms_row(shard, shard_size, zeros).drop_columns(["shard"])
     pq.write_table(
         tbl, os.path.join(d, "part-00000-empty.zstd.parquet"), compression="zstd"
     )

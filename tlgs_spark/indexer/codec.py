@@ -92,47 +92,6 @@ def decode_varints(buf: bytes) -> np.ndarray:
     return vals
 
 
-def decode_postings_batch(
-    blobs: list[bytes], dfs: np.ndarray, bases: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Decode MANY posting segments. Two regimes, measured on this box:
-
-    - many SMALL segments (rare term spread over hundreds of shards):
-      per-segment calls pay ~80 µs fixed NumPy overhead each, so decode
-      the concatenated stream in one vectorized pass (~6× faster —
-      varints are self-delimiting, so concatenation decodes cleanly);
-    - few LARGE segments (hot term): per-segment arrays stay
-      L2-resident while the concatenated stream works on multi-MB
-      arrays and goes memory-bandwidth-bound (~2× slower), so loop.
-
-    Returns concatenated (doc_ids, tfs); segment i holds dfs[i]
-    postings based at bases[i].
-    """
-    dfs = np.asarray(dfs, dtype=np.int64)
-    bases = np.asarray(bases, dtype=np.int64)
-    if dfs.size == 0:
-        return np.zeros(0, np.int64), np.zeros(0, np.int64)
-    if dfs.mean() > 4096:
-        parts = [decode_postings(b, base=int(ba)) for b, ba in zip(blobs, bases)]
-        return (
-            np.concatenate([p[0] for p in parts]),
-            np.concatenate([p[1] for p in parts]),
-        )
-    vals = decode_varints(b"".join(blobs))
-    gaps = vals[0::2].astype(np.int64)
-    tfs = vals[1::2].astype(np.int64)
-    c = np.cumsum(gaps)
-    ends = np.cumsum(dfs)
-    starts = ends - dfs
-    nonempty = dfs > 0
-    nz_starts = starts[nonempty]
-    prev_c_nz = np.where(nz_starts > 0, c[nz_starts - 1], 0)
-    offset = np.zeros(len(dfs), dtype=np.int64)
-    offset[nonempty] = bases[nonempty] - prev_c_nz
-    doc_ids = c + np.repeat(offset, dfs)
-    return doc_ids, tfs
-
-
 def range_indices(starts: np.ndarray, lengths: np.ndarray) -> np.ndarray:
     """The flat index array selecting ``[starts[i], starts[i]+lengths[i])``
     for every range i, in range order — the vectorized multi-slice
@@ -168,7 +127,7 @@ def decode_postings_blocks(
     prevs: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Decode SELECTED posting blocks out of a concatenated blob stream
-    (postings format 3: per-block byte offsets stored at build time).
+    (the postings format stores per-block byte offsets at build time).
 
     ``buf``   uint8 view of the whole blob stream;
     ``boff``  byte offset of each selected block's first varint;

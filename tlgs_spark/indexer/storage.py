@@ -11,22 +11,31 @@ Tables (Iceberg DDL equivalent):
 
     docs             (doc_id BIGINT, conv_id STRING, turn_idx INT, role STRING,
                       tool STRING, ts TIMESTAMP, size BIGINT, text_hash BIGINT,
-                      text STRING)                       PARTITIONED BY (bucket(doc_id))
-    doc_lengths      (doc_id BIGINT, dl BIGINT)
+                      text STRING)                       PARTITIONED BY (shard)
+                     -- shard = doc_id // shard_size; one doc_id-sorted
+                     -- file per shard (meta docs_layout)
+    doc_lengths      (shard INT, doc_id BIGINT, dl BIGINT) PARTITIONED BY (shard)
     norms            (shard INT, base BIGINT, n BIGINT, dls BINARY)
-    term_stats       (term STRING, df BIGINT, cf BIGINT)
+                                                         PARTITIONED BY (shard)
+    term_stats       (term STRING, df BIGINT, cf BIGINT, shards ARRAY<INT>,
+                      shard_bits BINARY, shard_bloom BINARY)
+    first_turn_terms (shard INT, conv_id STRING, term STRING)
+                                                         PARTITIONED BY (shard)
     collection_stats (n_docs BIGINT, total_dl BIGINT, avgdl DOUBLE,
                       n_terms BIGINT, n_postings BIGINT)
     postings         (shard INT, term STRING, df BIGINT, cf BIGINT,
-                      block_tfmax ARRAY<BIGINT>, block_dlmin ARRAY<BIGINT>,
                       block_fn ARRAY<BIGINT>, block_ftf ARRAY<BIGINT>,
                       block_fdl ARRAY<BIGINT>,
                       block_last ARRAY<BIGINT>, block_off ARRAY<BIGINT>,
                       postings BINARY,
                       dls BINARY)                        PARTITIONED BY (shard)
-                     -- format 2: one term=NULL pseudo row per shard
-                     -- carries the doc-length varint blob (dls),
-                     -- cf = Σdl, block_last = [base]; norms /
+                     -- format 4: per 128-posting block, the last doc
+                     -- id (block_last), the blob byte offset
+                     -- (block_off) and the (tf, dl) Pareto front
+                     -- (block_fn = front length, block_ftf/block_fdl
+                     -- = flattened pairs); one term=NULL pseudo row
+                     -- per shard carries the doc-length varint blob
+                     -- (dls), cf = Σdl, block_last = [base]; norms /
                      -- doc_lengths / collection_stats derive from it
                      -- at finalize
     ledger           (shard INT, status STRING, n_terms BIGINT, n_postings BIGINT,
@@ -65,6 +74,15 @@ TABLES = (
 # carries the rest by manifest reference — the r4 "prepare ∝ edit"
 # contract extends the r3 postings machinery to every per-shard table.
 PARTITIONED_TABLES = ("postings", "docs", "norms", "doc_lengths", "first_turn_terms")
+
+# the postings table's Spark schema (format 4, see the DDL above) —
+# stated once: the builder writes with it, read_sharded falls back to it
+POSTINGS_SCHEMA = (
+    "shard int, term string, df long, cf long, "
+    "block_fn array<long>, block_ftf array<long>, block_fdl array<long>, "
+    "block_last array<long>, block_off array<long>, "
+    "postings binary, dls binary"
+)
 
 
 class IndexStorage:
@@ -376,15 +394,7 @@ class IndexStorage:
                     dfs.append(spark.read.option("basePath", base).parquet(*paths))
         if not dfs:
             if table == "postings":
-                return spark.createDataFrame(
-                    [],
-                    "shard int, term string, df long, cf long, "
-                    "block_tfmax array<long>, block_dlmin array<long>, "
-                    "block_fn array<long>, block_ftf array<long>, "
-                    "block_fdl array<long>, "
-                    "block_last array<long>, block_off array<long>, "
-                    "postings binary, dls binary",
-                )
+                return spark.createDataFrame([], POSTINGS_SCHEMA)
             return spark.read.parquet(self.path(table))
         out = dfs[0]
         for d in dfs[1:]:
@@ -672,7 +682,7 @@ def index_status(spark, index_dir: str) -> dict:
 
     st = IndexStorage(index_dir)
     meta = st.read_meta()
-    # collection_stats is a finalize product since postings format 2 —
+    # collection_stats is a finalize product —
     # a status probe against an in-flight build reports it as pending
     if st.exists("collection_stats"):
         stats = st.read(spark, "collection_stats").collect()[0].asDict()

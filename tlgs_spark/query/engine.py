@@ -10,7 +10,8 @@ Two execution paths over the same postings tables:
   (search.cpp:438-446) — and is exact-parity with the oracle.
 
 - **distributed path** (`SearchIndex.search_df`): the same scorer run
-  per shard via ``applyInPandas`` (shards score in parallel, each
+  per shard by Arrow kernels (``mapInArrow`` inside the postings scan,
+  or ``groupBy(shard).applyInArrow``; shards score in parallel, each
   emits a local top-k), then a global ``orderBy(score desc, doc_id)
   .limit(k)``. This is the 100 TB path: no posting list ever
   concentrates on one node (doc-range sharding), and the global merge
@@ -32,8 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import bm25
-from ..indexer.codec import decode_postings, decode_postings_batch, decode_varints
+from ..indexer.build import index_meta_current
+from ..indexer.codec import decode_varints
 from ..indexer.storage import IndexStorage
 from ..tokenizer import s_stem, tokenize_query
 from .parser import SearchFilter, eval_filter_row, parse_search_query
@@ -49,93 +50,36 @@ from .scorer import (
 from .snippet import make_snippet
 
 
-def block_bounds_arr(row, fmt: int, avgdl: float) -> np.ndarray:
+def block_bounds_arr(row, avgdl: float) -> np.ndarray:
     """Per-block admissible tf_norm upper bound (float64) from a
-    postings row, under any format — THE single authority for the
-    bound (the driver path's method and every executor closure call
-    this one function, so the K1/B constants can never fork between
-    copies).
+    postings row — THE single authority for the bound (the driver path
+    and every executor kernel call this one function, so the K1/B
+    constants can never fork between copies).
 
-    Format 3 evaluates tf_norm over the block's stored (tf, dl) PARETO
-    FRONT — real pairs, same float expression and op order as scoring
+    tf_norm is evaluated over the block's stored (tf, dl) PARETO FRONT
+    — real pairs, same float expression and op order as scoring
     (tf_norm_vec), so the bound is the block's EXACT maximum tf_norm:
     admissible with zero slack, no rounding pad needed, and tight
-    enough that block-max WAND actually skips blocks.
-
-    Format 2 computes tfn(max_tf, min_dl, avgdl) — best tf and best dl
-    from possibly DIFFERENT docs — padded by 1e-12 relative: the
-    monotone formula at the block's extremes dominates every element
-    up to float rounding, and the pad swallows that rounding (WAND
-    stays exact; bound loose)."""
-    if fmt >= 3:
-        fn = np.asarray(row["block_fn"], dtype=np.int64)
-        if fn.size == 0:
-            return np.zeros(0, dtype=np.float64)
-        s = tf_norm_vec(
-            np.asarray(row["block_ftf"], dtype=np.int64),
-            np.asarray(row["block_fdl"], dtype=np.int64),
-            avgdl,
-        )
-        return np.maximum.reduceat(s, np.cumsum(fn) - fn)
-    if fmt >= 2:
-        t = np.asarray(row["block_tfmax"], dtype=np.float64)
-        d = np.asarray(row["block_dlmin"], dtype=np.float64)
-        if t.size == 0:
-            return t
-        b = t * (bm25.K1 + 1.0) / (
-            t + bm25.K1 * (1.0 - bm25.B + bm25.B * d / avgdl)
-        )
-        return b * (1.0 + 1e-12)
-    return np.asarray(row["block_max"], dtype=np.float64)
+    enough that block-max WAND actually skips blocks."""
+    fn = np.asarray(row["block_fn"], dtype=np.int64)
+    if fn.size == 0:
+        return np.zeros(0, dtype=np.float64)
+    s = tf_norm_vec(
+        np.asarray(row["block_ftf"], dtype=np.int64),
+        np.asarray(row["block_fdl"], dtype=np.int64),
+        avgdl,
+    )
+    return np.maximum.reduceat(s, np.cumsum(fn) - fn)
 
 
-def _stream_scorer(score_one, b_dl):
-    """mapInPandas kernel shared by search_df and exact_scores_df:
-    a scan task's rows cover only whole shards (one unsplit file each,
-    gated by _one_file_per_shard), so grouping by shard within the
-    task is exact. ``score_one(group_pdf, dl_global)`` does the
-    per-shard scoring."""
-
-    def score_stream(batches):
-        accs = list(batches)
-        if not accs:
-            return
-        allr = pd.concat(accs, ignore_index=True)
-        if not len(allr):
-            return
-        dl_global = b_dl.value
-        for _, g in allr.groupby("shard", sort=False):
-            yield score_one(g, dl_global)
-
-    return score_stream
-
-
-def _group_scorer(score_one, b_dl):
-    """groupBy(shard).applyInPandas twin of _stream_scorer: doc
-    lengths come from the broadcast when it fits, else from the
-    norms-join columns riding the group (per-shard dls blob)."""
-
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        if b_dl is not None:
-            dl_global = b_dl.value
-        else:
-            base = int(pdf["base"].iloc[0])
-            dls_shard = decode_varints(bytes(pdf["dls"].iloc[0])).astype(np.int64)
-            dl_global = np.zeros(base + len(dls_shard), dtype=np.int64)
-            dl_global[base:] = dls_shard  # scorer indexes by global doc_id
-        return score_one(pdf, dl_global)
-
-    return score_shard
-
-
-# ---------------- Arrow-native executor kernels (format 3) ----------------
-# The pandas kernels copy every posting blob into a Python bytes object
-# and every block-metadata list into an object array during Arrow→pandas
-# conversion — ~60 ms/task of pure conversion on dense terms, which IS
-# the single-wave latency floor a large cluster would see. The Arrow
-# kernels read blobs as zero-copy buffer slices and block metadata as
-# zero-copy int64 views, and hand the scorer LazyTermData so per-shard
-# block skipping applies on executors exactly as on the driver.
+# ---------------- Arrow-native executor kernels ----------------
+# The kernels read posting blobs as zero-copy buffer slices and block
+# metadata as zero-copy int64 views (an Arrow→pandas conversion would
+# copy every blob into a Python bytes object and every list into an
+# object array — ~60 ms/task on dense terms, the single-wave latency
+# floor a large cluster would see), and hand the scorer LazyTermData so
+# per-shard block skipping applies on executors exactly as on the
+# driver.
 
 def _list_cell(col, i: int) -> np.ndarray:
     """ChunkedArray list cell → int64 NumPy view (empty on NULL)."""
@@ -145,7 +89,7 @@ def _list_cell(col, i: int) -> np.ndarray:
     return np.asarray(v.values.to_numpy(zero_copy_only=False), dtype=np.int64)
 
 
-def _lazy_terms_arrow(tbl, q_terms, df_map, shard_size: int, avgdl: float, fmt: int):
+def _lazy_terms_arrow(tbl, q_terms, df_map, shard_size: int, avgdl: float):
     """One shard's SELECTED postings rows (Arrow table) → per-query-term
     LazyTermData, zero-copy: the blob stays an Arrow buffer view, block
     metadata stays int64 views. Missing terms become empty TermData."""
@@ -176,7 +120,7 @@ def _lazy_terms_arrow(tbl, q_terms, df_map, shard_size: int, avgdl: float, fmt: 
         boff = _list_cell(tbl.column("block_off"), i)
         df = int(df_col[i].as_py())
         blob = np.frombuffer(post_col[i].as_buffer(), dtype=np.uint8)
-        bm = block_bounds_arr(row, fmt, avgdl)
+        bm = block_bounds_arr(row, avgdl)
         nb = int(fn.size)
         sizes = np.full(nb, 128, dtype=np.int64)
         if nb:
@@ -271,10 +215,20 @@ class SearchIndex:
         pre-commit fresh-build state (id 0 for the first generation).
         Reads work until ``IndexStorage.vacuum`` expires the snapshot
         (protect a window with ``retain_snapshots``/grace); an expired,
-        reset, or unknown snapshot raises KeyError here at open."""
+        reset, or unknown snapshot raises KeyError here at open; an
+        index whose meta fails ``index_meta_current`` (older postings
+        format, docs layout or analyzer) raises ValueError — rebuild it."""
         self.spark = spark
         self.st = IndexStorage(index_dir, at_snapshot=at_snapshot)
         self.meta = self.st.read_meta()
+        if not index_meta_current(self.meta):
+            raise ValueError(
+                f"index at {index_dir} was written by an older build "
+                f"(postings_format={self.meta.get('postings_format')!r}, "
+                f"docs_layout={self.meta.get('docs_layout')!r}, "
+                f"tokenizer={self.meta.get('tokenizer')!r}); rebuild it "
+                f"with build_index(..., resume=False)"
+            )
         row = self.st.read(spark, "collection_stats").collect()[0]
         self.n_docs = int(row.n_docs)
         self.avgdl = float(row.avgdl)
@@ -283,35 +237,29 @@ class SearchIndex:
         # updates leave gaps (deletions) and allocate above the ceiling
         # (inserts), so every doc_id-indexed array sizes by ceiling
         self.doc_ceiling = int(self.meta.get("doc_ceiling", self.meta["n_docs"]))
-        # postings format 1 stored per-block tf_norm float bounds;
-        # format 2 stores per-block (max tf, min dl) ints and the
-        # bound tfn(max_tf, min_dl, avgdl) is computed here at query
-        # time (admissible: tfn is increasing in tf, decreasing in dl)
-        self.postings_format = int(self.meta.get("postings_format", 1))
-        # Snapshot completeness check (local dirs): a format-2 build
-        # emits one partition dir per in-grid shard (every shard holds
-        # at least its norms pseudo row), so an absent dir — manifest
-        # reference or plain dir scan alike — means corruption
-        # (over-eager cleanup, lost mount, a build opened mid-write).
-        # Fail loudly at open rather than silently serving partial
-        # results with wrong global stats.
-        if self.postings_format >= 2:
-            import os as _os
+        # Snapshot completeness check (local dirs): a build emits one
+        # partition dir per in-grid shard (every shard holds at least
+        # its norms pseudo row), so an absent dir — manifest reference
+        # or plain dir scan alike — means corruption (over-eager
+        # cleanup, lost mount, a build opened mid-write). Fail loudly
+        # at open rather than silently serving partial results with
+        # wrong global stats.
+        import os as _os
 
-            if _os.path.isdir(index_dir):
-                n_shards = int(self.meta["n_shards"])
-                missing = [
-                    _os.path.join(base, f"shard={s}")
-                    for base, shards in self.st.postings_sources()
-                    for s in (shards if shards is not None else range(n_shards))
-                    if not _os.path.isdir(_os.path.join(base, f"shard={s}"))
-                ]
-                if missing:
-                    raise FileNotFoundError(
-                        f"index snapshot is missing shard partition(s): "
-                        f"{missing[:5]}{'...' if len(missing) > 5 else ''} "
-                        f"({len(missing)} missing)"
-                    )
+        if _os.path.isdir(index_dir):
+            n_shards = int(self.meta["n_shards"])
+            missing = [
+                _os.path.join(base, f"shard={s}")
+                for base, shards in self.st.postings_sources()
+                for s in (shards if shards is not None else range(n_shards))
+                if not _os.path.isdir(_os.path.join(base, f"shard={s}"))
+            ]
+            if missing:
+                raise FileNotFoundError(
+                    f"index snapshot is missing shard partition(s): "
+                    f"{missing[:5]}{'...' if len(missing) > 5 else ''} "
+                    f"({len(missing)} missing)"
+                )
         self._dl: np.ndarray | None = None
         self._meta_cache: dict[int, tuple] = {}
         self._first_convs_cache: dict[str, frozenset] = {}
@@ -399,8 +347,8 @@ class SearchIndex:
         self._filtered_cache.clear()
         self._meta_cache.clear()
         self._first_convs_cache.clear()
-        if hasattr(self, "_term_cache"):
-            self._term_cache.clear()
+        for cache in ("_term_cache", "_tinfo_cache", "_arrow_cache"):
+            getattr(self, cache, {}).clear()
 
     def __enter__(self) -> "SearchIndex":
         return self
@@ -442,15 +390,12 @@ class SearchIndex:
         ids = np.unique(np.asarray(ids, dtype=np.int64))
         missing = [int(i) for i in ids if int(i) not in self._meta_cache]
         if missing:
-            # hive-layout docs (v2): prune the lookup to exactly the
-            # shard= dirs the requested ids live in
-            sharded = str(self.meta.get("docs_layout", "")).startswith("sharded_sorted_v2")
-            restrict = (
-                sorted({int(i) // self.shard_size for i in missing}) if sharded else None
-            )
+            # prune the lookup to exactly the shard= dirs the requested
+            # ids live in
             tbl = self._arrow_lookup(
                 "docs", missing, ["doc_id", *self._META_COLS], key_field="doc_id",
-                partitioning="hive" if sharded else None, shard_restrict=restrict,
+                partitioning="hive",
+                shard_restrict=sorted({i // self.shard_size for i in missing}),
             )
             if tbl is not None:
                 got = tbl.to_pandas()
@@ -486,9 +431,7 @@ class SearchIndex:
         """conv_ids whose turn-0 text contains ``term`` (infirst:/
         intitle analog, search.cpp:206-207) — a per-term point lookup
         on the build-time first_turn_terms table (df-sized result, not
-        corpus-sized). Legacy indexes without the table derive it with
-        one distributed tokenize pass, still collecting only the
-        matching conv_ids. The filter term goes through the SAME
+        corpus-sized). The filter term goes through the SAME
         analyzer as the stored terms (lowercase + stem — the table
         holds tokenize_tokens output, which stems; the reference's
         intitle terms go through the same tsquery stemmer as body
@@ -497,32 +440,14 @@ class SearchIndex:
         hit = self._first_convs_cache.get(t)
         if hit is not None:
             return hit
-        if self.st.exists("first_turn_terms"):
-            tbl = self._arrow_lookup("first_turn_terms", [t], ["conv_id"])
-            if tbl is not None:
-                out = frozenset(tbl["conv_id"].to_pylist())
-            else:
-                rows = (
-                    self.st.read(self.spark, "first_turn_terms")
-                    .filter(F.col("term") == t)
-                    .select("conv_id")
-                    .collect()
-                )
-                out = frozenset(r.conv_id for r in rows)
+        tbl = self._arrow_lookup("first_turn_terms", [t], ["conv_id"])
+        if tbl is not None:
+            out = frozenset(tbl["conv_id"].to_pylist())
         else:
-            from ..indexer.build import tokenize_tokens
-
             rows = (
-                tokenize_tokens(
-                    self.st.read(self.spark, "docs")
-                    .filter(F.col("turn_idx") == 0)
-                    .select("doc_id", "text"),
-                    hygiene=self.meta.get("hygiene", False),
-                )
+                self.st.read(self.spark, "first_turn_terms")
                 .filter(F.col("term") == t)
-                .join(self.st.read(self.spark, "docs").select("doc_id", "conv_id"), "doc_id")
                 .select("conv_id")
-                .distinct()
                 .collect()
             )
             out = frozenset(r.conv_id for r in rows)
@@ -531,18 +456,11 @@ class SearchIndex:
 
     # ---------------- postings access ----------------
 
-    @property
-    def _block_cols(self) -> list[str]:
-        if self.postings_format >= 3:
-            # (tf, dl) Pareto fronts — exact block bounds; block_fn's
-            # length is the segment's block count
-            return ["block_fn", "block_ftf", "block_fdl"]
-        if self.postings_format >= 2:
-            return ["block_tfmax", "block_dlmin"]
-        return ["block_max"]
-
-    def _block_bounds(self, row) -> np.ndarray:
-        return block_bounds_arr(row, self.postings_format, self.avgdl)
+    # the postings columns every scorer reads: (tf, dl) Pareto fronts
+    # (exact block bounds; block_fn's length is the segment's block
+    # count), skip pointers, per-block byte offsets, the blob
+    _POSTINGS_COLS = ("df", "block_fn", "block_ftf", "block_fdl",
+                      "block_last", "block_off", "postings")
 
     def term_rows(self, terms: list[str], shards: list[int] | None = None) -> pd.DataFrame:
         """Point-lookup the terms' postings rows. Serving path: direct
@@ -555,11 +473,7 @@ class SearchIndex:
         partitions (caller guarantees they cover every requested term's
         full presence list — partial coverage would silently truncate
         postings and corrupt the per-term cache)."""
-        cols = ["term", "shard", "df", *self._block_cols, "postings"]
-        if self.postings_format >= 3:
-            # lazy-decode metadata (block-skipped BMW): skip pointers +
-            # per-block byte offsets ride along
-            cols[-1:-1] = ["block_last", "block_off"]
+        cols = ["term", "shard", *self._POSTINGS_COLS]
         tbl = self._arrow_lookup(
             "postings", terms, cols,
             partitioning="hive", shard_restrict=shards,
@@ -860,8 +774,7 @@ class SearchIndex:
         list (selective terms, ≤ TERM_SHARDS_MAX entries) or from the
         fixed-width shard_bits bitmap (every term while n_shards ≤
         SHARD_BITMAP_MAX — so mid-df terms prune too); None means
-        'assume everywhere' — legacy indexes predating the columns,
-        >4096-shard grids, or a full-coverage bitmap. Results are
+        'assume everywhere' — a full-coverage bitmap or bloom. Results are
         cached per term (term_stats is immutable for an open
         snapshot); absent terms cache as df=0 so repeat misses don't
         re-scan."""
@@ -883,38 +796,15 @@ class SearchIndex:
         return out
 
     def _term_info_uncached(self, terms: list[str]) -> dict[str, tuple[int, list | None]]:
-        has_shards = "shards" in self._term_stats_df.columns
-        has_bits = "shard_bits" in self._term_stats_df.columns
-        has_bloom = "shard_bloom" in self._term_stats_df.columns
-        cols = (
-            ["term", "df"]
-            + (["shards"] if has_shards else [])
-            + (["shard_bits"] if has_bits else [])
-            + (["shard_bloom"] if has_bloom else [])
-        )
+        cols = ["term", "df", "shards", "shard_bits", "shard_bloom"]
         tbl = self._arrow_lookup("term_stats", terms, cols)
         if tbl is not None:
-            dfs = [int(x) for x in tbl["df"].to_pylist()]
-            n = len(dfs)
-            shl = tbl["shards"].to_pylist() if has_shards else [None] * n
-            bl = tbl["shard_bits"].to_pylist() if has_bits else [None] * n
-            bm = tbl["shard_bloom"].to_pylist() if has_bloom else [None] * n
-            return {
-                t: (d, self._presence(s, b, o))
-                for t, d, s, b, o in zip(tbl["term"].to_pylist(), dfs, shl, bl, bm)
-            }
-        rows = self._term_stats_df.filter(F.col("term").isin(terms)).collect()
-        return {
-            r.term: (
-                int(r.df),
-                self._presence(
-                    r.shards if has_shards else None,
-                    r.shard_bits if has_bits else None,
-                    r.shard_bloom if has_bloom else None,
-                ),
+            rows = zip(*(tbl[c].to_pylist() for c in cols))
+        else:
+            rows = (
+                self._term_stats_df.filter(F.col("term").isin(terms)).select(*cols).collect()
             )
-            for r in rows
-        }
+        return {t: (int(d), self._presence(s, b, o)) for t, d, s, b, o in rows}
 
     def _presence(self, shards, bits, bloom=None) -> list | None:
         """Shard-presence list from a term_stats row: the explicit
@@ -924,9 +814,9 @@ class SearchIndex:
         cliff and scan everything), else the CANDIDATE set from the
         fixed-128 B shard_bloom (>SHARD_BITMAP_MAX grids — a sound
         superset: blooms have no false negatives, so pruning to it
-        never drops a matching shard). None = unknown/everywhere
-        (legacy index, or full coverage — which prunes nothing, and
-        dropping it skips a useless n_shards-element isin filter)."""
+        never drops a matching shard). None = everywhere (full
+        coverage prunes nothing, and dropping it skips a useless
+        n_shards-element isin filter)."""
         n_shards = int(self.meta["n_shards"])
         if shards is not None:
             return list(shards)
@@ -1005,9 +895,6 @@ class SearchIndex:
                     ]
                 )
                 for d in dirs:
-                    if not os.path.isdir(d):
-                        continue  # legacy format-1 zero-posting shard
-                        # (format-2 absences raise at __init__)
                     try:
                         files = [
                             e
@@ -1061,76 +948,44 @@ class SearchIndex:
             dfs = g["df"].to_numpy(dtype=np.int64)
             bases = g["shard"].to_numpy(dtype=np.int64) * self.shard_size
             blobs = [bytes(b) for b in g["postings"]]
-            # block bounds: concatenate the per-segment block columns
+            bl_lists = [np.asarray(x, dtype=np.int64) for x in g["block_last"]]
+            bo_lists = [np.asarray(x, dtype=np.int64) for x in g["block_off"]]
+            # block bounds: concatenate the per-segment front columns
             # and evaluate the (elementwise) bound formula ONCE per
-            # term — a hot term spans hundreds of shard segments and
-            # the old per-row iterrows() pass cost ~0.2 s of a 1.3 s
-            # cold query in pandas Series construction alone
-            cols = {
-                c: [np.asarray(x, dtype=np.float64) for x in g[c].to_numpy()]
-                for c in self._block_cols
-            }
-            first = cols[self._block_cols[0]]
-            nbs = np.array([len(x) for x in first], dtype=np.int64)
-            cat_row = {
-                c: (np.concatenate(v) if v else np.zeros(0, np.float64))
-                for c, v in cols.items()
-            }
-            bm_all = self._block_bounds(cat_row)
+            # term — a hot term spans hundreds of shard segments
+            bm_all = block_bounds_arr(
+                {
+                    c: np.concatenate([np.asarray(x, dtype=np.int64) for x in g[c]])
+                    for c in ("block_fn", "block_ftf", "block_fdl")
+                },
+                self.avgdl,
+            )
             # per-block posting counts: 128 everywhere except each
             # segment's last block, which holds the remainder
+            nbs = np.array([bl.size for bl in bl_lists], dtype=np.int64)
             sizes = np.full(int(nbs.sum()), 128, dtype=np.int64)
-            nz = nbs > 0
-            last_idx = np.cumsum(nbs) - 1
-            sizes[last_idx[nz]] = dfs[nz] - 128 * (nbs[nz] - 1)
-            if self.postings_format >= 3:
-                # LAZY term: no decode here. Assemble the global block
-                # metadata (skip pointers, absolute byte offsets into
-                # the concatenated blob stream, per-block predecessor
-                # doc ids) — the scorer decodes only the blocks the
-                # top-k threshold cannot prune.
-                seg_lens = np.array([len(b) for b in blobs], dtype=np.int64)
-                seg_off = np.cumsum(seg_lens) - seg_lens
-                bl_lists = [np.asarray(x, dtype=np.int64) for x in g["block_last"]]
-                bo_lists = [np.asarray(x, dtype=np.int64) for x in g["block_off"]]
-                block_last = (
-                    np.concatenate(bl_lists) if bl_lists else np.zeros(0, np.int64)
+            sizes[np.cumsum(nbs) - 1] = dfs - 128 * (nbs - 1)
+            # LAZY term: no decode here. Assemble the global block
+            # metadata (skip pointers, absolute byte offsets into the
+            # concatenated blob stream, per-block predecessor doc ids)
+            # — the scorer decodes only the blocks the top-k threshold
+            # cannot prune.
+            seg_lens = np.array([len(b) for b in blobs], dtype=np.int64)
+            seg_off = np.cumsum(seg_lens) - seg_lens
+            block_off = np.concatenate([bo + so for bo, so in zip(bo_lists, seg_off)])
+            block_bytes = np.concatenate(
+                [np.diff(np.append(bo, ln)) for bo, ln in zip(bo_lists, seg_lens)]
+            )
+            block_prev = np.concatenate(
+                [np.concatenate(([b], bl[:-1])) for b, bl in zip(bases, bl_lists)]
+            )
+            blob_cat = np.frombuffer(b"".join(blobs), dtype=np.uint8)
+            out.append(
+                LazyTermData(
+                    t, int(dfs.sum()), blob_cat, bm_all, sizes,
+                    np.concatenate(bl_lists), block_prev, block_off, block_bytes,
                 )
-                block_off = (
-                    np.concatenate([bo + so for bo, so in zip(bo_lists, seg_off)])
-                    if bo_lists
-                    else np.zeros(0, np.int64)
-                )
-                block_bytes = (
-                    np.concatenate(
-                        [
-                            np.diff(np.append(bo, ln))
-                            for bo, ln in zip(bo_lists, seg_lens)
-                        ]
-                    )
-                    if bo_lists
-                    else np.zeros(0, np.int64)
-                )
-                block_prev = (
-                    np.concatenate(
-                        [
-                            np.concatenate(([b], bl[:-1]))
-                            for b, bl in zip(bases, bl_lists)
-                        ]
-                    )
-                    if bl_lists
-                    else np.zeros(0, np.int64)
-                )
-                blob_cat = np.frombuffer(b"".join(blobs), dtype=np.uint8)
-                out.append(
-                    LazyTermData(
-                        t, int(dfs.sum()), blob_cat, bm_all, sizes,
-                        block_last, block_prev, block_off, block_bytes,
-                    )
-                )
-                continue
-            doc_ids, tfs = decode_postings_batch(blobs, dfs, bases)
-            out.append(TermData(t, int(dfs.sum()), doc_ids, tfs, bm_all, sizes))
+            )
         return out
 
     # ---------------- search (driver path) ----------------
@@ -1405,25 +1260,10 @@ class SearchIndex:
         return cond
 
     def _first_terms_df(self) -> DataFrame:
-        """The (conv_id, term) infirst flag table as a DataFrame —
-        build-time table when present, else derived distributively
-        (legacy indexes), never collected."""
+        """The build-time (conv_id, term) infirst flag table as a
+        DataFrame — never collected."""
         if not hasattr(self, "_ftt_df"):
-            if self.st.exists("first_turn_terms"):
-                self._ftt_df = self.st.read(self.spark, "first_turn_terms")
-            else:
-                from ..indexer.build import tokenize_tokens
-
-                docs = self.st.read(self.spark, "docs")
-                self._ftt_df = (
-                    tokenize_tokens(
-                        docs.filter(F.col("turn_idx") == 0).select("doc_id", "text"),
-                        hygiene=self.meta.get("hygiene", False),
-                    )
-                    .join(docs.select("doc_id", "conv_id"), "doc_id")
-                    .select("conv_id", "term")
-                    .distinct()
-                )
+            self._ftt_df = self.st.read(self.spark, "first_turn_terms")
         return self._ftt_df
 
     def search_df(self, query: str, k: int = 10, mode: str = "and") -> DataFrame:
@@ -1435,13 +1275,13 @@ class SearchIndex:
 
         - **single-stage** (default when every shard partition is one
           unsplit local file and the dl broadcast fits): the postings
-          scan itself feeds ``mapInPandas``; each scan task holds only
+          scan itself feeds ``mapInArrow``; each scan task holds only
           COMPLETE shards, so per-shard scoring happens inside the scan
           with NO shuffle, and the global top-k is a
           TakeOrderedAndProject. One stage, ~scan-task-count tasks —
-          the applyInPandas shuffle cost (~1.5 s fixed at 256 shards)
+          the grouped plan's shuffle cost (~1.5 s fixed at 256 shards)
           is gone.
-        - **grouped** fallback: ``groupBy(shard).applyInPandas`` (multi
+        - **grouped** fallback: ``groupBy(shard).applyInArrow`` (multi
           file shards, norms-join dl delivery, non-local index).
 
         Scan pruning: selective terms carry a shard-presence list in
@@ -1507,85 +1347,43 @@ class SearchIndex:
         # 10^12-doc dl array can't live in one broadcast; each shard
         # then decodes only its own blob).
         use_dl_bc = self.doc_ceiling <= self.dl_broadcast_max_docs
-        sel_cols = ["shard", "term", "df", *self._block_cols, "postings"]
-        if self.postings_format >= 3:
-            sel_cols[-1:-1] = ["block_last", "block_off"]
-        if use_dl_bc:
-            b_dl = self._dl_broadcast()
-            joined = posts.select(*sel_cols)
-        else:
-            b_dl = None
-            # project BEFORE the join: format-2 postings carry their own
-            # per-shard `dls` pseudo-column, which would collide with the
-            # norms table's `dls` (and the blobs are dead weight anyway)
-            joined = posts.select(*sel_cols).join(
-                F.broadcast(self._norms_df.select("shard", "base", "dls")),
-                "shard",
-            )
+        sel_cols = ["shard", "term", *self._POSTINGS_COLS]
+        b_dl = self._dl_broadcast() if use_dl_bc else None
 
-        # executor-side block-bound derivation: block_bounds_arr is
+        # executor kernel: _lazy_terms_arrow / block_bounds_arr are
         # module-level and the closure captures scalars only (capturing
         # `self` would drag the SparkSession into the pickled function)
-        fmt = self.postings_format
-
-        def _score_one(pdf: pd.DataFrame, dl_global) -> pd.DataFrame:
-            """Score ONE complete shard's postings rows (pandas kernel,
-            format ≤ 2)."""
-            shard0 = int(pdf["shard"].iloc[0])
-            base = shard0 * shard_size
-            tds = []
-            rows_by_term = {t: None for t in q_terms}
-            for _, r in pdf.iterrows():
-                rows_by_term[r["term"]] = r
-            for t in q_terms:
-                r = rows_by_term.get(t)
-                if r is None:
-                    tds.append(TermData(t, df_map.get(t, 0), np.zeros(0, np.int64),
-                                        np.zeros(0, np.int64), np.zeros(0, np.float64),
-                                        np.zeros(0, np.int64)))
-                    continue
-                d, tf = decode_postings(bytes(r["postings"]), base=base)
-                bm = block_bounds_arr(r, fmt, avgdl)
-                sizes = np.full(len(bm), 128, dtype=np.int64)
-                if len(bm):
-                    sizes[-1] = len(d) - 128 * (len(bm) - 1)
-                tds.append(TermData(t, df_map.get(t, 0), d, tf, bm, sizes))
-            fn = search_and if mode == "and" else search_or
-            ids, sc = fn(tds, dl_global, n_docs, avgdl, fetch_k)
-            return pd.DataFrame({"doc_id": ids, "score": sc})
-
         def _score_one_arrow(sub, dl_global):
-            """Arrow kernel (format 3): zero-copy blob/metadata handoff
+            """Score ONE complete shard: zero-copy blob/metadata handoff
             + per-shard block skipping via LazyTermData."""
             import pyarrow as pa
 
-            tds = _lazy_terms_arrow(sub, q_terms, df_map, shard_size, avgdl, fmt)
+            tds = _lazy_terms_arrow(sub, q_terms, df_map, shard_size, avgdl)
             fn = search_and if mode == "and" else search_or
             ids, sc = fn(tds, dl_global, n_docs, avgdl, fetch_k)
             return pa.record_batch(
                 {"doc_id": pa.array(ids, pa.int64()), "score": pa.array(sc, pa.float64())}
             )
 
+        return self._shard_scored_df(posts.select(*sel_cols), _score_one_arrow, b_dl)
+
+    def _shard_scored_df(self, posts: DataFrame, score_tbl, b_dl) -> DataFrame:
+        """Run a per-shard Arrow kernel over the selected postings rows:
+        single-stage inside the scan (mapInArrow; scan tasks hold
+        complete shards) when every shard partition is one unsplit
+        local file and the dl broadcast fits — no shuffle at all — else
+        groupBy(shard).applyInArrow, with doc lengths delivered by the
+        norms join when the broadcast does not fit."""
         out_schema = "doc_id long, score double"
-        if use_dl_bc and self._one_file_per_shard:
-            # single-stage: score inside the scan (see the kernels)
-            if fmt >= 3:
-                local = posts.select(*sel_cols).mapInArrow(
-                    _arrow_stream_scorer(_score_one_arrow, b_dl), schema=out_schema
-                )
-            else:
-                local = posts.select(*sel_cols).mapInPandas(
-                    _stream_scorer(_score_one, b_dl), schema=out_schema
-                )
-        elif fmt >= 3:
-            local = joined.groupBy("shard").applyInArrow(
-                _arrow_group_scorer(_score_one_arrow, b_dl), schema=out_schema
+        if b_dl is not None and self._one_file_per_shard:
+            return posts.mapInArrow(_arrow_stream_scorer(score_tbl, b_dl), schema=out_schema)
+        if b_dl is None:
+            posts = posts.join(
+                F.broadcast(self._norms_df.select("shard", "base", "dls")), "shard"
             )
-        else:
-            local = joined.groupBy("shard").applyInPandas(
-                _group_scorer(_score_one, b_dl), schema=out_schema
-            )
-        return local
+        return posts.groupBy("shard").applyInArrow(
+            _arrow_group_scorer(score_tbl, b_dl), schema=out_schema
+        )
 
     def exact_scores_df(self, terms: list[str], mode: str = "and") -> DataFrame:
         """DataFrame(doc_id, score): EXACT BM25 scores for every doc
@@ -1594,11 +1392,7 @@ class SearchIndex:
         where another field's contribution can reorder any candidate).
 
         Physical strategies mirror search_df: term→shard pruning on the
-        scan, then score INSIDE the scan (mapInPandas; scan tasks hold
-        complete shards) when every shard partition is one unsplit
-        local file and the dl broadcast fits — no shuffle at all —
-        else groupBy(shard).applyInPandas with dls delivered via the
-        norms join."""
+        scan, then the per-shard kernel via ``_shard_scored_df``."""
         info = self._term_info(terms)
         dfm = {t: d for t, (d, _) in info.items()}
         empty = self.spark.createDataFrame([], "doc_id long, score double")
@@ -1615,46 +1409,12 @@ class SearchIndex:
             posts = posts.filter(F.col("shard").isin(allowed))
         use_dl_bc = self.doc_ceiling <= self.dl_broadcast_max_docs
         b_dl = self._dl_broadcast() if use_dl_bc else None
-        fmt = self.postings_format
-
-        def _score_one(pdf: pd.DataFrame, dl_global) -> pd.DataFrame:
-            base = int(pdf["shard"].iloc[0]) * shard_size
-            rows = {r["term"]: r for _, r in pdf.iterrows()}
-            tds = []
-            for t in q_terms:
-                r = rows.get(t)
-                if r is None:
-                    tds.append(TermData(t, dfm.get(t, 0), np.zeros(0, np.int64),
-                                        np.zeros(0, np.int64), np.zeros(0, np.float64),
-                                        np.zeros(0, np.int64)))
-                    continue
-                d, tf = decode_postings(bytes(r["postings"]), base=base)
-                tds.append(TermData(t, dfm.get(t, 0), d, tf,
-                                    np.zeros(0, np.float64), np.zeros(0, np.int64)))
-            if mode == "and":
-                if any(td.doc_ids.size == 0 for td in tds):
-                    return pd.DataFrame({"doc_id": [], "score": []})
-                by_df = sorted(tds, key=lambda t: t.doc_ids.size)
-                cand = by_df[0].doc_ids
-                for td in by_df[1:]:
-                    pos = np.searchsorted(td.doc_ids, cand)
-                    pos_c = np.minimum(pos, td.doc_ids.size - 1)
-                    cand = cand[(pos < td.doc_ids.size) & (td.doc_ids[pos_c] == cand)]
-                    if cand.size == 0:
-                        return pd.DataFrame({"doc_id": [], "score": []})
-            else:
-                nonempty = [td.doc_ids for td in tds if td.doc_ids.size]
-                if not nonempty:
-                    return pd.DataFrame({"doc_id": [], "score": []})
-                cand = np.unique(np.concatenate(nonempty))
-            sc = _exact_scores(cand, tds, dl_global, n_docs, avgdl)
-            return pd.DataFrame({"doc_id": cand, "score": sc})
 
         def _exact_one_arrow(sub, dl_global):
-            """Arrow kernel (format 3): AND-mode decodes the rarest term
-            plus only the blocks covering surviving candidates; OR-mode
-            must score every match, so it materializes (but blobs and
-            metadata still hand off zero-copy)."""
+            """AND-mode decodes the rarest term plus only the blocks
+            covering surviving candidates; OR-mode must score every
+            match, so it materializes (but blobs and metadata still
+            hand off zero-copy)."""
             import pyarrow as pa
 
             def _empty():
@@ -1663,7 +1423,7 @@ class SearchIndex:
                      "score": pa.array([], pa.float64())}
                 )
 
-            tds = _lazy_terms_arrow(sub, q_terms, dfm, shard_size, avgdl, fmt)
+            tds = _lazy_terms_arrow(sub, q_terms, dfm, shard_size, avgdl)
             if mode == "and":
                 if any(td.n_postings == 0 for td in tds):
                     return _empty()
@@ -1685,33 +1445,8 @@ class SearchIndex:
                  "score": pa.array(sc, pa.float64())}
             )
 
-        sel_cols = ["shard", "term", "postings"]
-        if fmt >= 3:
-            sel_cols = ["shard", "term", "df", *self._block_cols,
-                        "block_last", "block_off", "postings"]
-        out_schema = "doc_id long, score double"
-        if use_dl_bc and self._one_file_per_shard:
-            if fmt >= 3:
-                return posts.select(*sel_cols).mapInArrow(
-                    _arrow_stream_scorer(_exact_one_arrow, b_dl), schema=out_schema
-                )
-            return posts.select(*sel_cols).mapInPandas(
-                _stream_scorer(_score_one, b_dl), schema=out_schema
-            )
-
-        joined = posts.select(*sel_cols) if b_dl is not None else posts.select(
-            *sel_cols
-        ).join(
-            F.broadcast(self._norms_df.select("shard", "base", "dls")),
-            "shard",
-        )
-        if fmt >= 3:
-            return joined.groupBy("shard").applyInArrow(
-                _arrow_group_scorer(_exact_one_arrow, b_dl), schema=out_schema
-            )
-        return joined.groupBy("shard").applyInPandas(
-            _group_scorer(_score_one, b_dl), schema=out_schema
-        )
+        sel_cols = ["shard", "term", *self._POSTINGS_COLS]
+        return self._shard_scored_df(posts.select(*sel_cols), _exact_one_arrow, b_dl)
 
     def search_df_fielded(
         self,

@@ -559,7 +559,7 @@ def search_or(
 
 
 # ---------------------------------------------------------------------------
-# block-skipped (lazy-decode) paths — format-3 indexes only
+# block-skipped (lazy-decode) paths
 # ---------------------------------------------------------------------------
 
 def _idf(n_docs: int, df: int) -> float:

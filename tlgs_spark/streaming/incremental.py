@@ -79,16 +79,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..indexer.build import (
-    DOCS_LAYOUT_SHARDED,
     FUSED_ASSIGN_MAX_DOCS,
-    POSTINGS_FORMAT,
     assign_doc_ids,
     build_index,
+    index_meta_current,
     tokenize_tokens,
     write_empty_shard_partition,
 )
 from ..indexer.storage import PARTITIONED_TABLES, IndexStorage
-from ..tokenizer import ANALYZER_VERSION
 
 # tables recomputed by every incremental update → staged as new versions
 # (index_meta is a versioned small file, not a parquet dir — same
@@ -207,17 +205,14 @@ def _row_sig_col(th_col, meta_cols: list[str]):
 def _delta_ready(spark: SparkSession, st_old: IndexStorage, meta: dict, hygiene: bool):
     """(delta_ok, committed collection_stats row | None): the committed
     index must be reusable as-is for the edit-proportional path.
-    Analyzer/hygiene/format guard (r2 ADVICE + r3): reusing postings
-    built under a different tokenizer spec, hygiene setting, or
-    physical format would mix incompatible segments inside one index.
-    Layout guard: partition-granular reuse needs the v2 hive layout.
-    Health guard: a -1 collection_stats placeholder (crashed direct
-    build) cannot seed exact ±deltas."""
+    Analyzer/hygiene/format/layout guard (index_meta_current): reusing
+    postings built under a different tokenizer spec, hygiene setting,
+    physical format or docs layout would mix incompatible segments
+    inside one index. Health guard: a -1 collection_stats placeholder
+    (crashed direct build) cannot seed exact ±deltas."""
     ok = (
-        meta.get("tokenizer") == ANALYZER_VERSION
+        index_meta_current(meta)
         and meta.get("hygiene", False) == hygiene
-        and meta.get("postings_format") == POSTINGS_FORMAT
-        and meta.get("docs_layout") == DOCS_LAYOUT_SHARDED
         and all(
             st_old.exists(t)
             for t in ("docs", "postings", "norms", "term_stats", "collection_stats")
@@ -743,14 +738,6 @@ def _delta_finalize(
         .withColumn("sh_o", F.lit(None).cast("array<int>"))
     )
     ts_old = st_old.read(spark, "term_stats")
-    has_shards = "shards" in ts_old.columns
-    if not has_shards:
-        ts_old = ts_old.withColumn("shards", F.lit(None).cast("array<int>"))
-    has_bits = "shard_bits" in ts_old.columns
-    if not has_bits:
-        ts_old = ts_old.withColumn("shard_bits", F.lit(None).cast("binary"))
-    if "shard_bloom" not in ts_old.columns:
-        ts_old = ts_old.withColumn("shard_bloom", F.lit(None).cast("binary"))
     changed_lit = F.array(*[F.lit(int(s)).cast("int") for s in changed])
     jt = ts_old.join(deltas, "term", "full_outer")
     df1 = (
@@ -780,7 +767,7 @@ def _delta_finalize(
     )
     # presence BITMAP (shard_bits): same set algebra, bit-wise —
     # new = (old & ~changed_mask) | mask(sh_n). Exact for every term of
-    # a bitmap-era index (build writes bits for ALL terms); a legacy
+    # a bitmap-era index (build writes bits for ALL terms); a
     # committed row without bits stays NULL (unknown presence — the
     # engine then just doesn't prune that term). The changed-shard mask
     # and the grid width are constants of this update, closed over by
@@ -991,11 +978,9 @@ def _full_update(
         # geometry changed (corpus grew past the old shard grid) →
         # everything rebuilds; still correct, just not incremental
         old_sigs = {}
-    elif (
-        meta.get("tokenizer") != new_meta.get("tokenizer")
-        or meta.get("hygiene", False) != new_meta.get("hygiene", False)
-        or meta.get("postings_format") != new_meta.get("postings_format")
-    ):
+    elif not index_meta_current(meta) or meta.get("hygiene", False) != hygiene:
+        # committed shards were built under another analyzer, format,
+        # layout or hygiene — none is reusable
         old_sigs = {}
     else:
         old = shard_signatures(
